@@ -1,9 +1,13 @@
-"""Generic schema tests + source freshness (SURVEY.md §2.4 A4-A6).
+"""Generic data tests + source freshness (SURVEY.md §2.4 A4-A6).
 
 dbt's generic tests compile to SQL returning *violating rows*; a test
-fails when that set is non-empty.  At 100 TB we never materialize the
-violations — each test is an aggregate with an early ``limit`` so
-Catalyst can short-circuit (SURVEY §7.7).
+fails when that set is non-empty.  Each single-relation test is defined
+ONCE here — as the predicate of its violating rows (row tests) or as
+its key columns (key tests) — and both its term in the relation's
+one-scan aggregate (``GenericTest.gate``) and its violations frame
+derive from that definition.  At 100 TB the runner answers every test
+on a relation with one aggregate job (SURVEY §7.7) and builds a
+violations frame only when it needs rows.
 """
 
 from __future__ import annotations
@@ -15,139 +19,154 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# tests that read a second relation -> the param naming it
+SECOND_RELATION = {"relationships": "to", "equal_rowcount": "compare_model"}
 
-@dataclass
-class TestResult:
+# dbt test config: severity / thresholds / store_failures, given either
+# directly on the test or under its ``config:`` block
+_CONFIG_KEYS = ("severity", "warn_if", "error_if", "store_failures")
+
+
+@dataclass(frozen=True)
+class GenericTest:
+    """One generic test as compiled onto a relation: the macro name, the
+    tested column ('' for model-level tests) and its params, dbt test
+    config removed (see :func:`parse_test`)."""
+
     name: str
-    status: str  # pass | fail | error
-    failures: int = 0
-    message: str = ""
-    violations: DataFrame | None = None  # set on fail (store_failures sink)
+    column: str
+    params: dict[str, Any]
 
-
-def unique_violations(df: DataFrame, column: str) -> DataFrame:
-    """Duplicated key values with their counts (empty ⇒ pass)."""
-    return (
-        df.groupBy(column).agg(F.count("*").alias("n_records")).filter(F.col("n_records") > 1)
-    )
-
-
-def unique_test(df: DataFrame, column: str) -> int:
-    """Count of duplicated key values (0 ⇒ pass).  Short-circuits via
-    limit(1)-style aggregate: only the existence matters."""
-    return unique_violations(df, column).limit(1000).count()
-
-
-def not_null_violations(df: DataFrame, column: str) -> DataFrame:
-    return df.filter(F.col(column).isNull())
-
-
-def not_null_test(df: DataFrame, column: str) -> int:
-    return not_null_violations(df, column).limit(1000).count()
-
-
-def accepted_values_violations(
-    df: DataFrame, column: str, values: list[Any]
-) -> DataFrame:
-    return df.filter(~F.col(column).isin(values) | F.col(column).isNull())
-
-
-def accepted_values_test(df: DataFrame, column: str, values: list[Any]) -> int:
-    return accepted_values_violations(df, column, values).limit(1000).count()
-
-
-def relationships_violations(
-    df: DataFrame, column: str, to_df: DataFrame, to_field: str
-) -> DataFrame:
-    """FK test: values in df.column missing from to_df.to_field."""
-    keys = to_df.select(F.col(to_field).alias(column)).distinct()
-    return (
-        df.select(column)
-        .filter(F.col(column).isNotNull())
-        .join(F.broadcast(keys), column, "left_anti")
-    )
-
-
-def relationships_test(
-    df: DataFrame, column: str, to_df: DataFrame, to_field: str
-) -> int:
-    return relationships_violations(df, column, to_df, to_field).limit(1000).count()
-
-
-def run_generic_test(
-    spark: SparkSession,
-    test_name: str,
-    relation_fqn: str,
-    column: str,
-    params: dict[str, Any],
-    resolve_relation=None,
-) -> TestResult:
-    df = spark.table(relation_fqn)
-    label = f"{test_name}_{relation_fqn}_{column}"
-    violations: DataFrame | None = None
-    try:
-        if test_name == "unique":
-            violations = unique_violations(df, column)
-            failures = violations.limit(1000).count()
-        elif test_name == "not_null":
-            violations = not_null_violations(df, column)
-            failures = violations.limit(1000).count()
-        elif test_name == "accepted_values":
-            violations = accepted_values_violations(df, column, params.get("values", []))
-            failures = violations.limit(1000).count()
-        elif test_name == "relationships":
-            to_rel = params["to"]
-            if resolve_relation is not None:
-                to_rel = resolve_relation(to_rel)
-            violations = relationships_violations(
-                df, column, spark.table(to_rel), params["field"]
-            )
-            failures = violations.limit(1000).count()
-        elif test_name == "equal_rowcount":
-            other = params["compare_model"]
-            if resolve_relation is not None:
-                other = resolve_relation(other)
-            failures = equal_rowcount_test(df, spark.table(other))
-        elif test_name == "unique_combination_of_columns":
-            violations = unique_combination_violations(
-                df, params["combination_of_columns"]
-            )
-            failures = violations.limit(1000).count()
-        elif test_name == "expression_is_true":
+    def row_predicate(self) -> Column | None:
+        """The violating-row condition of a row test; None otherwise."""
+        p = self.params
+        if self.name == "not_null":
+            return F.col(self.column).isNull()
+        if self.name == "accepted_values":
+            c = F.col(self.column)
+            return ~c.isin(p.get("values", [])) | c.isNull()
+        if self.name == "not_accepted_values":
+            return F.col(self.column).isin(p.get("values", []))
+        if self.name == "expression_is_true":
             # dbt_utils.expression_is_true: rows where the expression is
-            # NOT satisfied (NULL counts as a violation, like dbt's SQL)
-            expr = params["expression"]
-            scope = df.filter(params["where"]) if params.get("where") else df
-            violations = scope.filter(~F.coalesce(F.expr(expr), F.lit(False)))
-            failures = violations.limit(1000).count()
-        elif test_name == "not_accepted_values":
-            violations = df.filter(F.col(column).isin(params.get("values", [])))
-            failures = violations.limit(1000).count()
-        elif test_name == "recency":
-            # dbt_utils.recency: fail when max(field) is older than the
-            # interval — a model-level freshness check
-            period = params.get("period", "day")
-            n = int(params.get("interval", 1))
-            row = df.agg(F.max(F.col(params.get("field", column))).alias("m")).collect()[0]
-            threshold_expr = F.expr(f"current_timestamp() - INTERVAL {n} {period}")
-            stale = (
-                row.m is None
-                or spark.range(1)
-                .select((F.lit(row.m).cast("timestamp") < threshold_expr).alias("s"))
-                .collect()[0]
-                .s
+            # NOT satisfied (NULL counts as a violation, like dbt's SQL),
+            # within the optional ``where`` scope
+            bad = ~F.coalesce(F.expr(p["expression"]), F.lit(False))
+            if p.get("where"):
+                bad = bad & F.coalesce(F.expr(p["where"]), F.lit(False))
+            return bad
+        return None
+
+    def key_columns(self) -> list[str]:
+        """The columns a key test requires to be unique together; []
+        for every other test."""
+        if self.name == "unique":
+            return [self.column]
+        if self.name == "unique_combination_of_columns":
+            return list(self.params["combination_of_columns"])
+        return []
+
+    @property
+    def other_relation(self) -> str | None:
+        """Name of the second relation the test reads (None: it reads
+        only the tested one)."""
+        key = SECOND_RELATION.get(self.name)
+        return self.params[key] if key else None
+
+    def gate(self) -> Column | None:
+        """This test's term in the one-scan aggregate over its relation,
+        or None when the test reads a second relation.
+
+        A row test's term is its exact violating-row count.  A key
+        test's is ``count(*) - count_distinct(struct(keys))``: >0 iff a
+        key repeats (it counts surplus rows, not duplicated keys, so it
+        is only a zero-or-fired signal).  It matches the groupBy HAVING
+        count>1 semantics exactly, NULL keys included: a struct with
+        NULL fields is itself non-NULL, so the NULL group counts once.
+        """
+        pred = self.row_predicate()
+        if pred is not None:
+            return F.sum(pred.cast("long"))
+        keys = self.key_columns()
+        if keys:
+            return F.count(F.lit(1)) - F.count_distinct(
+                F.struct(*[F.col(k) for k in keys])
             )
-            failures = 1 if stale else 0
-        else:
-            return TestResult(label, "error", message=f"unknown test {test_name}")
-    except Exception as e:  # noqa: BLE001
-        return TestResult(label, "error", message=str(e)[:500])
-    return TestResult(
-        label,
-        "pass" if failures == 0 else "fail",
-        failures=failures,
-        violations=violations if failures else None,
-    )
+        if self.name == "recency":
+            # dbt_utils.recency: 1 when max(field) is older than the
+            # interval (or the relation is empty) — a model-level
+            # freshness check
+            newest = F.max(F.col(self.params.get("field", self.column)))
+            cutoff = F.expr(
+                f"current_timestamp() - INTERVAL {int(self.params.get('interval', 1))}"
+                f" {self.params.get('period', 'day')}"
+            )
+            return F.when(newest.isNull(), 1).when(
+                newest.cast("timestamp") < cutoff, 1
+            ).otherwise(0)
+        if self.name in SECOND_RELATION:
+            return None
+        raise ValueError(f"unknown test {self.name}")
+
+    def violations(self, df: DataFrame, other: DataFrame | None = None) -> DataFrame | None:
+        """The violating rows (key tests: one row per repeated key with
+        its ``n_records``); None for tests whose result is a number
+        (equal_rowcount, recency)."""
+        pred = self.row_predicate()
+        if pred is not None:
+            return df.filter(pred)
+        keys = self.key_columns()
+        if keys:
+            return (
+                df.groupBy(*keys)
+                .agg(F.count("*").alias("n_records"))
+                .filter(F.col("n_records") > 1)
+            )
+        if self.name == "relationships":
+            # FK test: values of the column missing from other.field
+            col = self.column
+            to_keys = other.select(F.col(self.params["field"]).alias(col)).distinct()
+            return (
+                df.select(col)
+                .filter(F.col(col).isNotNull())
+                .join(F.broadcast(to_keys), col, "left_anti")
+            )
+        return None
+
+    def failures(
+        self, df: DataFrame, other: DataFrame | None = None, gate: int | None = None
+    ) -> int:
+        """The test's failure count, uncapped (0 ⇒ pass).
+
+        ``gate`` is the test's value from the scan of ``df`` (:func:`scan`;
+        None for a test that reads a second relation).  Row tests and
+        recency take their count from it; a key test counts its
+        violations only when it fired."""
+        if self.name == "equal_rowcount":
+            # dbt_utils.equal_rowcount: |count(a) - count(b)|
+            return abs(df.count() - other.count())
+        if (gate and self.key_columns()) or self.name == "relationships":
+            return self.violations(df, other).count()
+        return gate
+
+
+def parse_test(config: dict[str, Any]) -> tuple[GenericTest, dict[str, Any]]:
+    """Split a compiled test node's config into the test and its dbt
+    test config (a key given directly on the test wins over the same
+    key under its ``config:`` block)."""
+    params = dict(config.get("params") or {})
+    test_cfg = dict(params.pop("config", None) or {})
+    for k in _CONFIG_KEYS:
+        v = params.pop(k, None)
+        if v:
+            test_cfg[k] = v
+    return GenericTest(config["test"], config.get("column") or "", params), test_cfg
+
+
+def scan(df: DataFrame, tests: list[GenericTest]) -> list[int]:
+    """Every test's gate term over ``df``, in ONE aggregate job."""
+    row = df.agg(*[t.gate().alias(f"t{i}") for i, t in enumerate(tests)]).collect()[0]
+    return [int(v or 0) for v in row]
 
 
 def _threshold_met(cond: str, failures: int) -> bool:
@@ -183,67 +202,6 @@ def threshold_status(
     if _threshold_met(warn_if, failures):
         return "warn"
     return "pass"
-
-
-def fused_violation_expr(
-    test_name: str, column: str | None, params: dict[str, Any]
-) -> Column | None:
-    """Aggregate expression that is >0 iff the test has violations, or
-    None when the test cannot be fused (touches a second relation).
-
-    Used by the runner's optimistic fused gate: all single-relation
-    tests on one table collapse into ONE aggregate scan (at 100 TB, N
-    tests = N full scans otherwise).  The exact-violation path only runs
-    when this signal fires, so pass results are byte-identical.
-
-    ``count(*) - count_distinct(struct(cols))`` matches the groupBy
-    HAVING count>1 semantics exactly, including NULL keys: a struct
-    with NULL fields is itself non-NULL, so count_distinct counts the
-    NULL group once, and any group of n>=2 contributes n-1.
-    """
-    if test_name == "unique" and column:
-        return F.count(F.lit(1)) - F.count_distinct(F.struct(F.col(column)))
-    if test_name == "not_null" and column:
-        return F.sum(F.col(column).isNull().cast("long"))
-    if test_name == "accepted_values" and column:
-        bad = ~F.col(column).isin(params.get("values", [])) | F.col(column).isNull()
-        return F.sum(bad.cast("long"))
-    if test_name == "unique_combination_of_columns":
-        cols = params.get("combination_of_columns") or []
-        if cols:
-            return F.count(F.lit(1)) - F.count_distinct(
-                F.struct(*[F.col(c) for c in cols])
-            )
-    if test_name == "expression_is_true" and params.get("expression"):
-        bad = ~F.coalesce(F.expr(params["expression"]), F.lit(False))
-        if params.get("where"):
-            bad = bad & F.coalesce(F.expr(params["where"]), F.lit(False))
-        return F.sum(bad.cast("long"))
-    if test_name == "not_accepted_values" and column:
-        return F.sum(F.col(column).isin(params.get("values", [])).cast("long"))
-    return None
-
-
-# -- dbt_utils-style model-level tests (X7; packages.yml:1-3 declares
-# dbt-labs/dbt_utils — the commonly used test macros, reimplemented) ---------
-
-
-def equal_rowcount_test(df: DataFrame, other: DataFrame) -> int:
-    """dbt_utils.equal_rowcount: |count(a) - count(b)| (0 ⇒ pass)."""
-    return abs(df.count() - other.count())
-
-
-def unique_combination_violations(df: DataFrame, columns: list[str]) -> DataFrame:
-    return (
-        df.groupBy(*columns)
-        .agg(F.count("*").alias("n_records"))
-        .filter(F.col("n_records") > 1)
-    )
-
-
-def unique_combination_test(df: DataFrame, columns: list[str]) -> int:
-    """dbt_utils.unique_combination_of_columns."""
-    return unique_combination_violations(df, columns).limit(1000).count()
 
 
 # -- source freshness (A6; reference src_example.yml:9-13) -------------------

@@ -26,6 +26,7 @@ from typing import Any
 
 import jinja2
 
+from ..operators.tests import SECOND_RELATION
 from .manifest import Manifest, Node, checksum_of
 from .project import Project
 
@@ -238,6 +239,54 @@ def compile_project(
     default_schema = tconf.get("schema", f"analytics_{target}")
     manifest = Manifest(project_name=project.name, target=target)
 
+    model_uid = {m.name: f"model.{project.name}.{m.name}" for m in project.models}
+    seed_uid = {s.name: f"seed.{project.name}.{s.name}" for s in project.seeds}
+    snap_uid = {s.name: f"snapshot.{project.name}.{s.name}" for s in project.snapshots}
+
+    def add_test(test_spec, parent_uid: str, stem: str, column: str) -> None:
+        """Attach one generic test to ``parent_uid`` (its depends_on[0]).
+        A test that reads a second relation (relationships.to,
+        equal_rowcount.compare_model) resolves it here: the relation is
+        appended to depends_on, so the test runs after it is built, and
+        recorded in ``ref_relations`` like a Python model's refs, so
+        deferral rewrites it with them."""
+        if isinstance(test_spec, dict):
+            test_name, params = next(iter(test_spec.items()))
+        else:
+            test_name, params = test_spec, {}
+        parent = manifest.nodes[parent_uid]
+        tuid = _test_unique_id(stem, column or "model", test_name)
+        # same test type declared twice on one column/model (e.g. two
+        # expression_is_true with different expressions): suffix a
+        # counter so neither silently overwrites the other
+        n_dup = 2
+        base_uid = tuid
+        while tuid in manifest.nodes:
+            tuid = f"{base_uid}_{n_dup}"
+            n_dup += 1
+        config = {"test": test_name, "column": column, "params": params}
+        deps = [parent_uid]
+        other = (params or {}).get(SECOND_RELATION.get(test_name))
+        dep = isinstance(other, str) and (
+            model_uid.get(other) or seed_uid.get(other) or snap_uid.get(other)
+        )
+        if dep:
+            config["ref_relations"] = {other: f"\x00REF:{dep}\x00"}
+            if dep != parent_uid:
+                deps.append(dep)
+        manifest.add(
+            Node(
+                unique_id=tuid,
+                name=tuid.split(".", 1)[1],
+                resource_type="test",
+                schema=parent.schema,
+                alias=parent.alias,
+                config=config,
+                depends_on=deps,
+                checksum=checksum_of(f"{test_name}:{column}", params),
+            )
+        )
+
     # sources first (S1): they are nodes so freshness/docs/state see them
     src_fqn: dict[tuple[str, str], str] = {}
     src_event_time: dict[tuple[str, str], str] = {}
@@ -266,28 +315,7 @@ def compile_project(
         # (catch upstream contract breaks before any model consumes them)
         for col, col_tests in (s.column_tests or {}).items():
             for t in col_tests:
-                if isinstance(t, dict):
-                    t_name, t_params = next(iter(t.items()))
-                else:
-                    t_name, t_params = t, {}
-                tuid = f"test.{t_name}_{s.source_name}_{s.name}_{col}"
-                n_dup = 2
-                base_uid = tuid
-                while tuid in manifest.nodes:
-                    tuid = f"{base_uid}_{n_dup}"
-                    n_dup += 1
-                manifest.add(
-                    Node(
-                        unique_id=tuid,
-                        name=tuid.split(".", 1)[1],
-                        resource_type="test",
-                        schema=s.schema,
-                        alias=s.name,
-                        config={"test": t_name, "column": col, "params": t_params},
-                        depends_on=[uid],
-                        checksum=checksum_of(f"{t_name}:{col}", t_params),
-                    )
-                )
+                add_test(t, uid, f"{s.source_name}_{s.name}", col)
 
     for seed in project.seeds:
         manifest.add(
@@ -307,10 +335,6 @@ def compile_project(
                 ),
             )
         )
-
-    model_uid = {m.name: f"model.{project.name}.{m.name}" for m in project.models}
-    seed_uid = {s.name: f"seed.{project.name}.{s.name}" for s in project.seeds}
-    snap_uid = {s.name: f"snapshot.{project.name}.{s.name}" for s in project.snapshots}
 
     env = jinja2.Environment(undefined=jinja2.StrictUndefined)
 
@@ -440,38 +464,11 @@ def compile_project(
         manifest.add(node)
         # attach generic tests (A4/A5; reference stg_example.yml:5-8),
         # plus model-level dbt_utils-style tests (X7)
-        def _add_test(test_spec, column: str) -> None:
-            if isinstance(test_spec, dict):
-                test_name, params = next(iter(test_spec.items()))
-            else:
-                test_name, params = test_spec, {}
-            tuid = _test_unique_id(m.name, column or "model", test_name)
-            # same test type declared twice on one column/model (e.g. two
-            # expression_is_true with different expressions): suffix a
-            # counter so neither silently overwrites the other
-            n_dup = 2
-            base_uid = tuid
-            while tuid in manifest.nodes:
-                tuid = f"{base_uid}_{n_dup}"
-                n_dup += 1
-            manifest.add(
-                Node(
-                    unique_id=tuid,
-                    name=tuid.split(".", 1)[1],
-                    resource_type="test",
-                    schema=node.schema,
-                    alias=node.alias,
-                    config={"test": test_name, "column": column, "params": params},
-                    depends_on=[node.unique_id],
-                    checksum=checksum_of(f"{test_name}:{column}", params),
-                )
-            )
-
         for col in m.columns:
             for t in col.tests:
-                _add_test(t, col.name)
+                add_test(t, node.unique_id, m.name, col.name)
         for t in m.model_tests:
-            _add_test(t, "")
+            add_test(t, node.unique_id, m.name, "")
 
     for s in project.snapshots:
         node = render_node(
@@ -624,7 +621,7 @@ def compile_project(
                 for kk, vv in v.items():
                     if isinstance(vv, str) and "\x00" in vv:
                         dep = token_re.search(vv).group(1)
-                        if dep in ephemeral:
+                        if dep in ephemeral and n.resource_type == "model":
                             raise CompilerError(
                                 f"{uid}: Python models cannot ref() the "
                                 f"ephemeral model {dep} (no relation to read)"

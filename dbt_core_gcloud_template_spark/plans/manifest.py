@@ -73,7 +73,13 @@ class Manifest:
         seen = set(uids)
         stack = list(uids)
         while stack:
-            for child in children.get(stack.pop(), []):
+            uid = stack.pop()
+            for child in children.get(uid, []):
+                # a test descends only from the relation it tests; a
+                # second relation it reads orders it, never selects it
+                node = self.nodes[child]
+                if node.resource_type == "test" and node.depends_on[0] != uid:
+                    continue
                 if child not in seen:
                     seen.add(child)
                     stack.append(child)

@@ -34,7 +34,7 @@ import re
 import subprocess
 import threading
 import time
-from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import asdict, dataclass, field
 from typing import Any
 
@@ -137,6 +137,74 @@ class RunResults:
         return out
 
 
+class _TestGates:
+    """The data tests of one build, each parsed once, and one aggregate
+    scan per tested relation.
+
+    Every gated test on a relation (``GenericTest.gate``) is answered by
+    ONE aggregate job over it — at 100 TB, N tests would otherwise be N
+    full scans.  The first test to ask scans for its siblings, which
+    wait for that scan; other relations scan concurrently.  A test
+    whose term fails analysis (unknown column, bad expression) gets its
+    own error and leaves its siblings' scan intact.
+    """
+
+    def __init__(self, spark: SparkSession, manifest: Manifest, uids: list[str]):
+        self.spark = spark
+        # test uid -> (tested relation fqn, GenericTest, dbt test config)
+        self.specs: dict[str, tuple[str, tests_op.GenericTest, dict[str, Any]]] = {}
+        for uid in uids:
+            node = manifest.nodes[uid]
+            if node.resource_type == "test":
+                fqn = manifest.nodes[node.depends_on[0]].fqn
+                self.specs[uid] = (fqn, *tests_op.parse_test(node.config))
+        self._gated = {
+            uid
+            for uid, (_, test, _) in self.specs.items()
+            if test.name not in tests_op.SECOND_RELATION and manifest.nodes[uid].enabled
+        }
+        self._lock = threading.Lock()
+        self._scans: dict[str, Future] = {}
+
+    def value(self, uid: str) -> int | None:
+        """The test's gate value; None for a test that reads a second
+        relation."""
+        if uid not in self._gated:
+            return None
+        fqn = self.specs[uid][0]
+        with self._lock:
+            fut = self._scans.get(fqn)
+            owner = fut is None
+            if owner:
+                fut = self._scans[fqn] = Future()
+        if owner:
+            try:
+                fut.set_result(self._scan(fqn))
+            except Exception as e:  # noqa: BLE001 — every sibling reports it
+                fut.set_exception(e)
+        out = fut.result()[uid]
+        if isinstance(out, Exception):
+            raise out
+        return out
+
+    def _scan(self, fqn: str) -> dict[str, Any]:
+        df = self.spark.table(fqn)
+        out: dict[str, Any] = {}
+        members = []
+        for uid, (rel, test, _) in self.specs.items():
+            if rel != fqn or uid not in self._gated:
+                continue
+            try:
+                df.agg(test.gate())  # analysis only, no job
+                members.append((uid, test))
+            except Exception as e:  # noqa: BLE001 — reported by that test
+                out[uid] = e
+        if members:
+            values = tests_op.scan(df, [t for _, t in members])
+            out.update({uid: v for (uid, _), v in zip(members, values)})
+        return out
+
+
 class Engine:
     """One project + one SparkSession + one artifact/state directory."""
 
@@ -173,10 +241,6 @@ class Engine:
         self._catalog_path = os.path.join(wh, "engine_catalog.json")
         self._catalog: dict[str, dict[str, Any]] = {}
         self._lock = threading.Lock()
-        # Optimistic fused test gate: per parent relation, one aggregate
-        # scan proves (or disproves) every fusable sibling test at once.
-        self._fused_gate: dict[str, dict[str, int]] = {}
-        self._fused_lock = threading.Lock()
         if os.path.exists(self._catalog_path):
             with open(self._catalog_path) as f:
                 self._catalog = json.load(f)
@@ -836,12 +900,9 @@ class Engine:
             return 0
         return total
 
-    def _check_bytes_cap(self, df: DataFrame, uid: str) -> None:
+    def _check_bytes_cap(self, est: int, uid: str) -> None:
         cap = self.target_conf.get("maximum_bytes_billed")
-        if not cap:
-            return
-        est = self._estimate_input_bytes(df)
-        if est > int(cap):
+        if cap and est > int(cap):
             raise RuntimeError(
                 f"estimated input bytes {est} exceed maximum_bytes_billed={cap}"
                 f" for {uid} (aborted before execution)"
@@ -917,6 +978,7 @@ class Engine:
         import shutil
 
         from ..sources.registry import stream_from_path
+        from ..streaming.events import merge_batch
 
         src_uids = [u for u in node.depends_on if u.startswith("source.")]
         if not src_uids:
@@ -969,17 +1031,15 @@ class Engine:
         def _land(batch: DataFrame, batch_id: int) -> None:
             nonlocal n_batches
             n_batches += 1
-            if not self.spark.catalog.tableExists(fqn):
-                self.write_relation(batch, fqn, node.config)
-                return
-            existing = self.spark.table(fqn)
-            if key_cols:
-                keys = batch.select(*key_cols).distinct()
-                kept = existing.join(keys, key_cols, "left_anti")
-                out = kept.unionByName(batch, allowMissingColumns=True)
-            else:
-                out = existing.unionByName(batch, allowMissingColumns=True)
-            self.write_relation(out, fqn, node.config, self_ref=True)
+            # the target is read by path: the versioned swap drops the
+            # catalog entry before a partitioned catalog read would run
+            merge_batch(
+                self.spark, batch, fqn, key_cols or [],
+                lambda df, t, cfg: self.write_relation(
+                    df, t, cfg, self_ref=self.spark.catalog.tableExists(t)
+                ),
+                node.config, self._read_relation_for_merge,
+            )
 
         writer = (
             sdf.writeStream.foreachBatch(_land)
@@ -1202,9 +1262,9 @@ class Engine:
             self._enforce_contract(df, node)
         if getattr(self, "_empty", False):
             df = df.limit(0)
-        self._check_bytes_cap(df, node.unique_id)
-        self._check_partition_filters(df, node)
         est_bytes = self._estimate_input_bytes(df)
+        self._check_bytes_cap(est_bytes, node.unique_id)
+        self._check_partition_filters(df, node)
         if (
             mat == "incremental"
             and node.config.get("incremental_strategy") == "microbatch"
@@ -1283,20 +1343,11 @@ class Engine:
                     input_bytes=est_bytes,
                 )
             if strategy == "insert_overwrite" and not new_cols:
-                part = node.config.get("partition_by")
-                fld = part["field"] if isinstance(part, dict) else part
-                if isinstance(part, dict) and part.get("data_type") in (
-                    "timestamp",
-                    "datetime",
-                ):
-                    gran = part.get("granularity", "day")
-                    pcol = f"{fld}_{gran}"
-                    df = df.withColumn(
-                        pcol,
-                        F.to_date(F.col(fld))
-                        if gran == "day"
-                        else F.to_date(F.date_trunc(gran, F.col(fld))),
-                    )
+                pcol, pexpr = self._derived_partition_col(
+                    node.config.get("partition_by")
+                )
+                if pexpr is not None:
+                    df = df.withColumn(pcol, pexpr)
                 # insertInto: positional + dynamic-overwrite on v1 tables
                 # (writeTo().overwritePartitions() is DSv2-only)
                 with self._conf_override(
@@ -1489,48 +1540,6 @@ class Engine:
         )
         return NodeResult(node.unique_id, "success", rows_affected=rows, message="SNAPSHOT")
 
-    def _fused_gate_result(self, parent_uid: str, manifest: Manifest) -> dict[str, int]:
-        """Violation signal per fusable test on ``parent_uid``'s relation,
-        computed lazily in ONE aggregate job and memoized for siblings.
-
-        Siblings all become runnable at the same instant (they share the
-        one parent dependency), so the first test thread to arrive scans
-        for everyone; the rest block briefly on the lock and read the
-        cache.  A lone fusable test gets an empty dict — its individual
-        path is already a single scan.
-        """
-        parent = manifest.nodes[parent_uid]
-        with self._fused_lock:
-            cached = self._fused_gate.get(parent.fqn)
-            if cached is not None:
-                return cached
-            sibs = []
-            for n in manifest.nodes.values():
-                if (
-                    n.resource_type != "test"
-                    or not n.depends_on
-                    or n.depends_on[0] != parent_uid
-                ):
-                    continue
-                p = dict(n.config.get("params") or {})
-                p.pop("config", None)
-                e = tests_op.fused_violation_expr(
-                    n.config["test"], n.config.get("column"), p
-                )
-                if e is not None:
-                    sibs.append((n.unique_id, e))
-            if len(sibs) < 2:
-                out: dict[str, int] = {}
-            else:
-                row = (
-                    self.spark.table(parent.fqn)
-                    .agg(*[e.alias(f"t{i}") for i, (_, e) in enumerate(sibs)])
-                    .collect()[0]
-                )
-                out = {uid: int(row[i] or 0) for i, (uid, _) in enumerate(sibs)}
-            self._fused_gate[parent.fqn] = out
-            return out
-
     def _run_hooks(self, node: Node, key: str) -> None:
         """Model-level pre/post hooks (dbt `pre-hook`/`post-hook`):
         SQL statements executed around the node's materialization, with
@@ -1550,75 +1559,33 @@ class Engine:
             )
             self.spark.sql(rendered)
 
-    def _run_test(self, node: Node, manifest: Manifest) -> NodeResult:
-        cfg = node.config
-        parent_uid = node.depends_on[0]
-        parent = manifest.nodes[parent_uid]
-
-        def resolve(name: str) -> str:
-            for n in manifest.nodes.values():
-                if n.name == name and n.resource_type in ("model", "seed", "snapshot"):
-                    return n.fqn
-            return name
-
-        params = dict(cfg.get("params") or {})
-        tcfg = dict(params.get("config") or {})
-        store = bool(
-            params.pop("store_failures", None)
-            or tcfg.get("store_failures")
-            or self.target_conf.get("store_failures")
-        )
-        params.pop("config", None)
-        # dbt severity config: severity / warn_if / error_if, either
-        # directly on the test or under its config block
-        severity = str(params.pop("severity", None) or tcfg.get("severity") or "error")
-        warn_if = str(params.pop("warn_if", None) or tcfg.get("warn_if") or "!=0")
-        error_if = str(params.pop("error_if", None) or tcfg.get("error_if") or "!=0")
-        default_sev = (severity.lower(), warn_if, error_if) == ("error", "!=0", "!=0")
-        # Optimistic fused gate: one aggregate scan over the parent
-        # relation evaluates every fusable sibling test at once (at
-        # 100 TB, N tests would otherwise be N full scans).  Exact
-        # violation counts/samples are only needed on FAILURE, so the
-        # precise per-test path below runs just when the gate fires.
-        # Custom thresholds can warn at 0 failures (e.g. warn_if '<5'),
-        # so only the default severity takes the fast path.
-        if default_sev and tests_op.fused_violation_expr(cfg["test"], cfg.get("column"), params) is not None:
-            gate = self._fused_gate_result(node.depends_on[0], manifest)
-            if gate.get(node.unique_id) == 0:
-                return NodeResult(
-                    node.unique_id,
-                    "pass",
-                    rows_affected=0,
-                    message=f"{cfg['test']}({cfg['column']})",
-                )
-        res = tests_op.run_generic_test(
-            self.spark,
-            cfg["test"],
-            parent.fqn,
-            cfg["column"],
-            params,
-            resolve_relation=resolve,
-        )
-        msg = res.message or f"{cfg['test']}({cfg['column']})"
-        if store and res.violations is not None:
+    def _run_test(self, node: Node, gates: _TestGates) -> NodeResult:
+        fqn, test, tcfg = gates.specs[node.unique_id]
+        severity = str(tcfg.get("severity") or "error")
+        warn_if = str(tcfg.get("warn_if") or "!=0")
+        error_if = str(tcfg.get("error_if") or "!=0")
+        df = self.spark.table(fqn)
+        other = None
+        if test.other_relation is not None:
+            # resolved at compile time (and rewritten by deferral);
+            # a name that is no node of the project is read as given
+            refs = node.config.get("ref_relations") or {}
+            other = self.spark.table(refs.get(test.other_relation, test.other_relation))
+        failures = test.failures(df, other, gates.value(node.unique_id))
+        msg = f"{test.name}({test.column})"
+        if failures and (tcfg.get("store_failures") or self.target_conf.get("store_failures")):
             # dbt store_failures parity: persist the (bounded) violating
             # rows to <schema>_dbt_test__audit.<test_name> for triage
-            audit_fqn = f"{parent.schema}_dbt_test__audit.{node.name}"
-            self.write_relation(res.violations.limit(1000), audit_fqn, {})
-            msg += f" [failures stored: {audit_fqn}]"
-        status = res.status
-        if status != "error":
-            status = tests_op.threshold_status(
-                res.failures, severity, warn_if, error_if
-            )
-            if status == "warn":
-                msg += f" [warn: severity={severity} warn_if={warn_if}]"
-        return NodeResult(
-            node.unique_id,
-            status,
-            rows_affected=res.failures,
-            message=msg,
-        )
+            violations = test.violations(df, other)
+            if violations is not None:
+                schema = fqn.split(".", 1)[0]
+                audit_fqn = f"{schema}_dbt_test__audit.{node.name}"
+                self.write_relation(violations.limit(1000), audit_fqn, {})
+                msg += f" [failures stored: {audit_fqn}]"
+        status = tests_op.threshold_status(failures, severity, warn_if, error_if)
+        if status == "warn":
+            msg += f" [warn: severity={severity} warn_if={warn_if}]"
+        return NodeResult(node.unique_id, status, rows_affected=failures, message=msg)
 
     def _run_unit_test(self, node: Node, manifest: Manifest) -> NodeResult:
         """dbt 1.8 unit test: render the model's SQL with every
@@ -1847,7 +1814,6 @@ class Engine:
         # dbt 1.8 --empty: schema-only dry run (models execute with
         # zero-row inputs; CI validates DDL/contracts without data cost)
         self._empty = empty
-        self._fused_gate.clear()  # relations may be rebuilt this run
         self.register_sources()
         self._run_python_hook("pre_run")
         for cmd in self.project.on_run_start:
@@ -1865,9 +1831,9 @@ class Engine:
                 for u in selected
                 if manifest.nodes[u].resource_type in resource_types
             }
-        # tests run iff their parent runs
+        # tests run iff the relation they test (depends_on[0]) runs
         for uid, node in manifest.nodes.items():
-            if node.resource_type == "test" and set(node.depends_on) & selected:
+            if node.resource_type == "test" and node.depends_on[0] in selected:
                 selected.add(uid)
             # unit tests run iff their model runs (they gate it: the
             # model depends_on them, so a fail skips the build)
@@ -1877,12 +1843,14 @@ class Engine:
             ):
                 selected.add(uid)
 
-        # deferral (E4): refs to unselected, unbuilt models resolve to the
-        # deferred manifest's relation
+        # deferral (E4): every relation a selected node reads from an
+        # unselected, unbuilt model resolves to the deferred manifest's
+        # relation — in compiled SQL and in ref_relations (a Python
+        # model's dbt.ref(), a test's second relation)
         if defer_manifest is not None:
             for uid in selected:
                 node = manifest.nodes[uid]
-                new_sql = node.compiled_sql
+                moved = {}
                 for dep_uid in node.depends_on:
                     dep = manifest.nodes.get(dep_uid)
                     if (
@@ -1892,10 +1860,14 @@ class Engine:
                         and not self.spark.catalog.tableExists(dep.fqn)
                         and dep_uid in defer_manifest.nodes
                     ):
-                        new_sql = new_sql.replace(
-                            dep.fqn, defer_manifest.nodes[dep_uid].fqn
-                        )
-                node.compiled_sql = new_sql
+                        moved[dep.fqn] = defer_manifest.nodes[dep_uid].fqn
+                for old, new in moved.items():
+                    node.compiled_sql = node.compiled_sql.replace(old, new)
+                refs = node.config.get("ref_relations")
+                if refs:
+                    node.config["ref_relations"] = {
+                        k: moved.get(v, v) for k, v in refs.items()
+                    }
 
         results = RunResults(target=self.target)
         universe = {
@@ -1913,6 +1885,7 @@ class Engine:
             }
         )
         statuses: dict[str, str] = {}
+        gates = _TestGates(self.spark, manifest, order)
 
         indeg = {
             uid: sum(1 for d in manifest.nodes[uid].depends_on if d in universe)
@@ -1981,7 +1954,7 @@ class Engine:
                     elif node.resource_type == "snapshot":
                         r = self._run_snapshot(node)
                     elif node.resource_type == "test":
-                        r = self._run_test(node, manifest)
+                        r = self._run_test(node, gates)
                     elif node.resource_type == "unit_test":
                         r = self._run_unit_test(node, manifest)
                     else:

@@ -392,6 +392,30 @@ def run_available_now(df: DataFrame, query_name: str, output_mode: str = "append
     return q
 
 
+def merge_batch(
+    spark: SparkSession,
+    batch: DataFrame,
+    target_fqn: str,
+    key_cols: list[str],
+    write_relation,
+    config: dict,
+    read_relation,
+) -> None:
+    """Land one micro-batch into ``target_fqn``: the first batch creates
+    it; later ones replace the target rows whose key the batch carries
+    (no key: every row is kept) and add the batch."""
+    if not spark.catalog.tableExists(target_fqn):
+        write_relation(batch, target_fqn, config)
+        return
+    existing = read_relation(target_fqn)
+    if key_cols:
+        keys = batch.select(*key_cols).distinct()
+        existing = existing.join(keys, key_cols, "left_anti")
+    write_relation(
+        existing.unionByName(batch, allowMissingColumns=True), target_fqn, config
+    )
+
+
 def stream_into_incremental(
     stream: DataFrame,
     spark: SparkSession,
@@ -403,7 +427,8 @@ def stream_into_incremental(
     read_relation=None,
 ):
     """foreachBatch → incremental-merge sink (the streaming version of
-    the `incremental` materialization).
+    the `incremental` materialization), one :func:`merge_batch` per
+    micro-batch.
 
     ``write_relation(df, fqn, cfg)`` owns the sink; callers must make
     it overwrite-safe for a plan that reads the target (stage-and-swap
@@ -422,17 +447,7 @@ def stream_into_incremental(
     read = read_relation or spark.table
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        if not spark.catalog.tableExists(target_fqn):
-            write_relation(batch, target_fqn, cfg)
-            return
-        existing = read(target_fqn)
-        keys = batch.select(*key_cols).distinct()
-        kept = existing.join(keys, key_cols, "left_anti")
-        write_relation(
-            kept.unionByName(batch, allowMissingColumns=True),
-            target_fqn,
-            cfg,
-        )
+        merge_batch(spark, batch, target_fqn, key_cols, write_relation, cfg, read)
 
     with pinned_drain_parallelism(spark):
         q = (

@@ -33,6 +33,41 @@ def test_curation_dag_green(curation):
     assert results.status_counts["pass"] == 12  # schema tests + retention unit test
 
 
+def test_defer_rewrites_python_model_refs(curation, spark, tmp_path):
+    """Slim CI on the curation DAG: after editing the Python model
+    docs_kept, `state:modified+ --defer` rebuilds it and its
+    downstream into the CI schema, and its dbt.ref() reads of
+    unselected models resolve to the deferred relations."""
+    import shutil
+
+    eng, _ = curation
+    prod = eng.compile()  # the built curation_dev DAG stands in for prod
+    proj = tmp_path / "curation"
+    shutil.copytree("demo_curation", proj, ignore=shutil.ignore_patterns("target"))
+    with open(proj / "profiles.yml", "a") as f:
+        f.write("    ci:\n      schema: curation_ci\n      threads: 8\n")
+    with open(proj / "models" / "curate" / "docs_kept.py", "a") as f:
+        f.write("\n# edited\n")
+    spark.sql("DROP DATABASE IF EXISTS curation_ci CASCADE")
+    ci = Engine(spark, str(proj), target="ci", state_dir=str(tmp_path / "ci_state"))
+    results, _ = ci.build(
+        select="state:modified+", defer_manifest=prod, prior_manifest=prod
+    )
+    by_uid = {r.unique_id: r for r in results.results}
+    assert by_uid["model.curation.docs_kept"].status == "success", by_uid[
+        "model.curation.docs_kept"
+    ].message
+    assert all(r.status in ("success", "pass") for r in results.results), [
+        (r.unique_id, r.status, r.message) for r in results.results
+    ]
+    assert "model.curation.stg_documents" not in by_uid
+    assert not spark.catalog.tableExists("curation_ci.stg_documents")
+    assert (
+        spark.table("curation_ci.docs_kept").count()
+        == spark.table("curation_dev.docs_kept").count()
+    )
+
+
 def test_curation_funnel_monotone(curation, spark):
     raw = spark.table("curation_dev.stg_documents").count()
     kept = spark.table("curation_dev.docs_kept").count()

@@ -845,13 +845,20 @@ def test_fused_gate_pass_and_precise_fallback(spark, sf_dir, tmp_path):
     (root / "models" / "staging" / "m.sql").write_text(
         "select o_orderkey as id, o_orderstatus as st from {{ source('raw','orders') }}"
     )
+    # a fourth sibling names no real column: it errors alone, without
+    # costing the others their scan
     (root / "models" / "staging" / "m.yml").write_text(
         "models:\n  - name: m\n    columns:\n"
         "      - name: id\n        tests: [unique, not_null]\n"
         "      - name: st\n"
         "        tests:\n"
         "          - accepted_values:\n              values: ['O', 'F']\n"
+        "    tests:\n"
+        "      - expression_is_true:\n          expression: 'no_such_col > 0'\n"
     )
+    sibs = ["test.unique_m_id", "test.not_null_m_id", "test.accepted_values_m_st"]
+    tracker = spark.sparkContext.statusTracker()
+    before = {g: set(tracker.getJobIdsForGroup(g)) for g in sibs}
     eng = Engine(spark, str(root))
     results, _ = eng.build()
     by_uid = {r.unique_id: r for r in results.results}
@@ -859,9 +866,15 @@ def test_fused_gate_pass_and_precise_fallback(spark, sf_dir, tmp_path):
     assert by_uid["test.unique_m_id"].rows_affected == 0
     assert by_uid["test.not_null_m_id"].status == "pass"
     av = by_uid["test.accepted_values_m_st"]
-    assert av.status == "fail" and av.rows_affected > 0
-    # the gate scanned once for the relation, covering all 3 siblings
-    assert len(eng._fused_gate.get("eng_fuse.m", {})) == 3
+    n_bad = spark.table("eng_fuse.m").filter("st not in ('O', 'F')").count()
+    assert av.status == "fail" and av.rows_affected == n_bad > 0
+    bad = by_uid["test.expression_is_true_m_model"]
+    assert bad.status == "error" and "no_such_col" in bad.message
+    # one scan answered all 3 siblings: the test that asked first ran
+    # it (under its job group); the other two ran no Spark job at all,
+    # and the failing row test took its exact count from the scan
+    jobs = {g: set(tracker.getJobIdsForGroup(g)) - before[g] for g in sibs}
+    assert sorted(len(j) > 0 for j in jobs.values()) == [False, False, True], jobs
 
 
 def test_test_severity_and_thresholds(spark, sf_dir, tmp_path):
@@ -1947,6 +1960,79 @@ def test_bigquery_compat_in_model_sql(spark, sf_dir, tmp_path):
     # even custkeys divide by zero -> SAFE_DIVIDE yields NULL, not error
     nulls = t.filter(t.ratio.isNull()).count()
     assert 0 < nulls < t.count()
+
+
+def test_defer_rewrites_test_relations(spark, sf_dir, tmp_path):
+    """Slim CI (`--select state:modified+ --defer`, reference
+    ci_build.sh:38-58): after a prod build, editing fct_example rebuilds
+    it into the CI schema, and its equal_rowcount test reads the
+    unselected stg_example from the deferred prod relation."""
+    import shutil
+
+    os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
+    proj = tmp_path / "demo"
+    shutil.copytree("demo_project", proj, ignore=shutil.ignore_patterns("target"))
+    for schema in ("analytics", "ci_pr"):
+        spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+    prod_results, prod = Engine(
+        spark, str(proj), target="prod", state_dir=str(tmp_path / "prod")
+    ).build()
+    assert prod_results.status_counts.get("error", 0) == 0
+    with open(proj / "models" / "marts" / "fct_example.sql", "a") as f:
+        f.write("\n-- edited")
+    ci = Engine(spark, str(proj), target="ci", state_dir=str(tmp_path / "ci"))
+    results, manifest = ci.build(
+        select="state:modified+", defer_manifest=prod, prior_manifest=prod
+    )
+    by_uid = {r.unique_id: r for r in results.results}
+    assert by_uid["model.demo.fct_example"].status == "success"
+    eq = by_uid["test.equal_rowcount_fct_example_model"]
+    assert eq.status == "pass", eq.message
+    assert all(r.status in ("success", "pass") for r in results.results), [
+        (r.unique_id, r.status, r.message) for r in results.results
+    ]
+    assert "model.demo.stg_example" not in by_uid
+    assert not spark.catalog.tableExists("ci_pr.stg_example")
+    # the compiled test records its second relation as a dependency
+    test_node = manifest.nodes["test.equal_rowcount_fct_example_model"]
+    assert test_node.depends_on == ["model.demo.fct_example", "model.demo.stg_example"]
+    assert test_node.config["ref_relations"] == {"stg_example": "analytics.stg_example"}
+
+
+def test_failure_counts_are_uncapped(spark, sf_dir, tmp_path):
+    """Failure counts are exact past 1000 rows, so `error_if: '>1000'`
+    can fire, for a row test (not_null) and a key test (unique)."""
+    root = tmp_path / "cap"
+    (root / "models").mkdir(parents=True)
+    (root / "project.yml").write_text("name: t\nprofile: t\n")
+    (root / "profiles.yml").write_text(
+        "t:\n  target: dev\n  outputs:\n    dev:\n      schema: eng_cap\n      threads: 2\n"
+    )
+    (root / "models" / "src.yml").write_text(
+        "sources:\n  - name: raw\n    schema: raw_cap\n    tables:\n"
+        "      - name: orders\n        external:\n"
+        f"          location: {sf_dir}/orders.parquet\n          format: parquet\n"
+    )
+    # every order twice, with a NULL column: 2n NULL rows, n repeated keys
+    (root / "models" / "m.sql").write_text(
+        "select o_orderkey as id, cast(null as int) as x from {{ source('raw','orders') }}\n"
+        "union all\n"
+        "select o_orderkey as id, cast(null as int) as x from {{ source('raw','orders') }}"
+    )
+    (root / "models" / "m.yml").write_text(
+        "models:\n  - name: m\n    columns:\n"
+        "      - name: id\n        tests:\n"
+        "          - unique:\n              config: {error_if: '>1000'}\n"
+        "      - name: x\n        tests:\n"
+        "          - not_null:\n              config: {error_if: '>1000'}\n"
+    )
+    n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    assert n > 1000
+    results, _ = Engine(spark, str(root)).build()
+    by_uid = {r.unique_id: r for r in results.results}
+    u, nn = by_uid["test.unique_m_id"], by_uid["test.not_null_m_x"]
+    assert (u.status, u.rows_affected) == ("fail", n)
+    assert (nn.status, nn.rows_affected) == ("fail", 2 * n)
 
 
 def test_run_results_record_input_bytes(spark, sf_dir, tmp_path):

@@ -96,18 +96,29 @@ def test_schema_diff_f6(spark):
 
 
 # ------------------------------------------------------------ generic tests
+def _failures(df, test, other=None):
+    """A test's failure count the way the runner takes it: its gate
+    term from a scan of ``df``, then ``failures``."""
+    gate = None if test.gate() is None else tests_op.scan(df, [test])[0]
+    return test.failures(df, other, gate)
+
+
 def test_unique_and_not_null(spark):
     df = spark.createDataFrame([(1,), (1,), (2,), (None,)], "id int")
-    assert tests_op.unique_test(df, "id") == 1  # one duplicated value
-    assert tests_op.not_null_test(df, "id") == 1
+    GT = tests_op.GenericTest
+    assert _failures(df, GT("unique", "id", {})) == 1  # one duplicated value
+    assert _failures(df, GT("not_null", "id", {})) == 1
 
 
 def test_accepted_values_and_relationships(spark):
+    GT = tests_op.GenericTest
     df = spark.createDataFrame([("high",), ("regular",), ("weird",)], "b string")
-    assert tests_op.accepted_values_test(df, "b", ["high", "regular"]) == 1
+    assert _failures(df, GT("accepted_values", "b", {"values": ["high", "regular"]})) == 1
     child = spark.createDataFrame([(1,), (2,), (9,)], "fk int")
     parent = spark.createDataFrame([(1,), (2,)], "pk int")
-    assert tests_op.relationships_test(child, "fk", parent, "pk") == 1
+    rel = GT("relationships", "fk", {"to": "parent", "field": "pk"})
+    assert rel.other_relation == "parent"
+    assert _failures(child, rel, parent) == 1
 
 
 # ------------------------------------------------------------------- dedup
@@ -777,12 +788,12 @@ def test_bigram_counts_adjacency(spark):
 
 
 # ---------------------------------------------------------------------------
-# fused test gate (operators/tests.py:fused_violation_expr)
+# fused test gate (operators/tests.py:GenericTest.gate)
 # ---------------------------------------------------------------------------
 def test_fused_violation_expr_matches_precise_tests(spark):
-    """The one-scan fused signal agrees with the per-test groupBy/filter
-    path on every edge case: NULL keys, NULL duplicates, values outside
-    the accepted set, multi-column keys with NULL components."""
+    """A test's one-scan gate term agrees with its violations frame on
+    every edge case: NULL keys, NULL duplicates, values outside the
+    accepted set, multi-column keys with NULL components."""
     from dbt_core_gcloud_template_spark.operators import tests as t
 
     df = spark.createDataFrame(
@@ -797,33 +808,39 @@ def test_fused_violation_expr_matches_precise_tests(spark):
     )
 
     def fused(test, col, params):
-        e = t.fused_violation_expr(test, col, params)
-        v = df.agg(e.alias("v")).collect()[0].v
-        return int(v or 0)
+        return t.scan(df, [t.GenericTest(test, col, params)])[0]
+
+    def precise(test, col, params):
+        return t.GenericTest(test, col, params).violations(df).count()
 
     # unique: precise counts duplicated KEYS; fused counts excess ROWS —
     # both are >0 exactly when a duplicate exists
-    assert (fused("unique", "id", {}) > 0) == (t.unique_test(df, "id") > 0)
+    assert (fused("unique", "id", {}) > 0) == (precise("unique", "id", {}) > 0)
     assert fused("unique", "id", {}) == 2  # dup 2 (+1 row) and dup NULL (+1 row)
-    assert fused("unique", "k", {}) == 0 and t.unique_test(df, "k") == 0
-    assert fused("unique", "name", {}) == 1 and t.unique_test(df, "name") == 1
+    assert fused("unique", "k", {}) == 0 and precise("unique", "k", {}) == 0
+    assert fused("unique", "name", {}) == 1 and precise("unique", "name", {}) == 1
 
-    assert fused("not_null", "id", {}) == 2
-    assert fused("not_null", "name", {}) == 0
-
-    p = {"values": ["x", "y"]}
-    assert fused("accepted_values", "bucket", p) == 1
-    assert fused("accepted_values", "bucket", {"values": ["x", "y", "zz"]}) == 0
+    # row tests: the gate term IS the violation count
+    for test, col, params, n in [
+        ("not_null", "id", {}, 2),
+        ("not_null", "name", {}, 0),
+        ("accepted_values", "bucket", {"values": ["x", "y"]}, 1),
+        ("accepted_values", "bucket", {"values": ["x", "y", "zz"]}, 0),
+        ("not_accepted_values", "bucket", {"values": ["zz"]}, 1),
+        ("expression_is_true", "", {"expression": "k < 40"}, 2),
+        ("expression_is_true", "", {"expression": "k < 40", "where": "bucket = 'x'"}, 1),
+    ]:
+        assert fused(test, col, params) == n == precise(test, col, params)
 
     pc = {"combination_of_columns": ["id", "name"]}
-    assert (fused("unique_combination_of_columns", None, pc) > 0) == (
-        t.unique_combination_test(df, ["id", "name"]) > 0
+    assert (fused("unique_combination_of_columns", "", pc) > 0) == (
+        precise("unique_combination_of_columns", "", pc) > 0
     )
-    assert fused("unique_combination_of_columns", None, {"combination_of_columns": ["id", "name", "bucket"]}) == 0
+    assert fused("unique_combination_of_columns", "", {"combination_of_columns": ["id", "name", "bucket"]}) == 0
 
-    # non-fusable tests return None
-    assert t.fused_violation_expr("relationships", "id", {}) is None
-    assert t.fused_violation_expr("equal_rowcount", None, {}) is None
+    # tests that read a second relation have no gate term
+    assert t.GenericTest("relationships", "id", {"to": "p"}).gate() is None
+    assert t.GenericTest("equal_rowcount", "", {"compare_model": "p"}).gate() is None
 
 
 def test_bigram_lm_perplexity_semantics(spark):

@@ -294,10 +294,10 @@ def test_fused_gate_exprs_agree_with_precise_tests_random(spark, case):
     df = spark.createDataFrame(
         [(i % 3 if i % 4 else None, txt) for i, txt in case], "k long, text string"
     )
-    fused_u = df.agg(t.fused_violation_expr("unique", "k", {}).alias("v")).collect()[0].v
-    fused_n = df.agg(t.fused_violation_expr("not_null", "k", {}).alias("v")).collect()[0].v
-    assert (int(fused_u or 0) > 0) == (t.unique_test(df, "k") > 0)
-    assert int(fused_n or 0) == df.filter(F.col("k").isNull()).count()
+    unique, not_null = t.GenericTest("unique", "k", {}), t.GenericTest("not_null", "k", {})
+    fused_u, fused_n = t.scan(df, [unique, not_null])
+    assert (fused_u > 0) == (unique.violations(df).count() > 0)
+    assert fused_n == df.filter(F.col("k").isNull()).count()
 
 
 @settings(max_examples=50, deadline=None)

@@ -472,6 +472,65 @@ def test_streaming_table_materialization(spark, sf_dir, tmp_path):
     assert out.filter("value = 999.0").count() == 5
 
 
+def test_streaming_table_partitioned_keyed_second_build(spark, sf_dir, tmp_path):
+    """A keyed streaming_table with partition_by survives its second
+    build: each micro-batch merge reads the target by path, so the
+    versioned swap cannot drop the table under a lazy partitioned
+    catalog read."""
+    import glob
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from dbt_core_gcloud_template_spark.plans.runner import Engine
+
+    src_dir = tmp_path / "feed"
+    src_dir.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", src_dir / "part-000.parquet")
+    root = tmp_path / "stpart"
+    (root / "models").mkdir(parents=True)
+    (root / "project.yml").write_text("name: st\nprofile: st\n")
+    (root / "profiles.yml").write_text(
+        "st:\n  target: dev\n  outputs:\n    dev:\n      schema: eng_stream_part\n      threads: 2\n"
+    )
+    (root / "models" / "src.yml").write_text(
+        "sources:\n  - name: feed\n    schema: raw_feed_part\n    tables:\n"
+        "      - name: events\n        external:\n"
+        f"          location: {src_dir}\n"
+        "          format: parquet\n"
+    )
+    (root / "models" / "live_events.sql").write_text(
+        "{{ config(materialized='streaming_table', unique_key='event_id', "
+        "partition_by='event_type') }}\n"
+        "select event_id, ts, user_id, event_type, value\n"
+        "from {{ source('feed', 'events') }}"
+    )
+    spark.sql("DROP DATABASE IF EXISTS eng_stream_part CASCADE")
+    eng = Engine(spark, str(root), state_dir=str(tmp_path / "ststate"))
+    results, _ = eng.build()
+    assert results.status_counts.get("error", 0) == 0, [
+        (r.unique_id, r.message) for r in results.results
+    ]
+    first = spark.table("eng_stream_part.live_events")
+    n1 = first.count()
+    # new file: 10 brand-new event_ids + 5 overlapping (merge upserts)
+    new_rows = (
+        first.limit(10).withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
+        .unionByName(first.limit(5).withColumn("value", F.lit(999.0)))
+    )
+    new_rows.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage"))
+    staged = glob.glob(str(tmp_path / "stage" / "*.parquet"))[0]
+    shutil.copy(staged, src_dir / "part-001.parquet")
+    results, _ = eng.build()
+    assert results.status_counts.get("error", 0) == 0, [
+        (r.unique_id, r.message) for r in results.results
+    ]
+    out = spark.table("eng_stream_part.live_events")
+    assert out.count() == n1 + 10
+    assert out.filter("value = 999.0").count() == 5
+    assert out.select("event_id").distinct().count() == n1 + 10
+
+
 def test_stream_semdedup_matches_batch(spark, sf_dir, tmp_path):
     """The streaming semantic tier (foreachBatch -> semdedup_incremental
     with a per-batch index fold, under a PINNED codebook): draining
